@@ -1,11 +1,11 @@
 package graft.ingest
 
-import java.nio.file.{Files, Paths}
 import java.time.Instant
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.CsvInferBridge
 import org.apache.spark.storage.StorageLevel
 
 import graft.schema.SchemaOps
@@ -21,32 +21,39 @@ import graft.schema.SchemaOps
   *
   * The whole plan is narrow (scan→project→union→project) — zero
   * shuffles, so it scales linearly with input bytes on any cluster.
-  * Schema inference costs one extra pass per file, same as the
-  * reference (SURVEY §4); at 100 TB you would supply an explicit schema
-  * per batch instead — `readOne` takes an optional schema for that.
+  * Schema inference is one extra pass over the batch's bytes, as in the
+  * reference (SURVEY §4), but one Spark job for the whole batch, not two
+  * per file: [[org.apache.spark.sql.graftbridge.CsvInferBridge]] infers
+  * every file's own schema in a single scan, and each file is then read
+  * with that schema, which runs no job. At 100 TB you would supply an
+  * explicit schema per batch instead — `readOne` takes one.
   */
 object CsvIngest {
 
-  /** A1 — list `*.csv` under `dir`; error if none (reference
-    * `job.py:29-37`).
+  /** A1 — list `*.csv` under `dir`, sorted; error if none (reference
+    * `job.py:29-37`). Lists through the Hadoop `FileSystem` of `dir`'s
+    * scheme — the one every later read goes through — so `file:` and
+    * remote URIs list like bare local paths.
     */
-  def discover(dir: String): Seq[String] = {
-    val p = Paths.get(dir)
+  def discover(dir: String, conf: Configuration = new Configuration()): Seq[String] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
     val found =
-      if (!Files.isDirectory(p)) Seq.empty
-      else scala.util.Using.resource(Files.list(p)) { stream =>
-        stream.iterator().asScala
-          .filter(f => f.toString.endsWith(".csv"))
-          .map(_.toString).toSeq.sorted
-      }
+      if (!fs.exists(p) || !fs.getFileStatus(p).isDirectory) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(s => s.isFile && s.getPath.getName.endsWith(".csv"))
+        .map(_.getPath.toString).sorted
     if (found.isEmpty)
       throw new IllegalArgumentException(s"No CSV files found in $dir")
     found
   }
 
-  /** A2 — one CSV, header + per-file schema inference. Per-file reads are
-    * the point: inferring over the union would erase the drift this
-    * engine exists to handle (`job.py:47-48`).
+  /** A2 — one CSV with a header. Per-file schemas are the point:
+    * inferring over the union would erase the drift this engine exists
+    * to handle (`job.py:47-48`). Without `schema`, Spark infers it at
+    * two jobs for this file; the batch path passes the schema
+    * [[org.apache.spark.sql.graftbridge.CsvInferBridge]] inferred for
+    * the file — the same one — so the read itself runs no job.
     */
   def readOne(spark: SparkSession, path: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
@@ -121,8 +128,9 @@ object CsvIngest {
 
   private def build(spark: SparkSession, dir: String, clock: Instant,
       persist: Boolean, fillDefaults: Boolean): (Seq[DataFrame], DataFrame) = {
-    val files = discover(dir)
-    val dfs = files.map(f => readOne(spark, f))
+    val files = discover(dir, spark.sparkContext.hadoopConfiguration)
+    val schemas = CsvInferBridge.inferSchemas(spark, files)
+    val dfs = files.zip(schemas).map { case (f, s) => readOne(spark, f, Some(s)) }
     val persisted =
       if (persist) dfs.map(_.persist(StorageLevel.DISK_ONLY)) else Seq.empty
     val frames = if (persist) persisted else dfs

@@ -3,7 +3,10 @@ package graft.schema
 import java.time.Instant
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Difference between an incoming frame's schema and a target schema
@@ -209,11 +212,34 @@ object SchemaOps {
   }
 
   /** D1 — n-ary union by name with missing columns null-filled
-    * (reference `job.py:57-59`). Spark resolves this by name, null-widens
-    * missing branches, and keeps the plan a flat `Union` — zero shuffles.
+    * (reference `job.py:57-59`): the result of
+    * `dfs.reduce(_.unionByName(_, allowMissingColumns = true))` — same
+    * columns in the same order, same types, same rows — built as one
+    * by-name `Union` analyzed once instead of n-1 eager analyses of a
+    * growing plan. The plan is a flat `Union` — zero shuffles.
+    *
+    * Spark resolves an n-ary by-name `Union` pairwise, left to right,
+    * but reads the accumulated union's output before widening its
+    * types, so it refuses frames whose common columns differ in type
+    * (`CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE`). Those go through the
+    * pairwise reduce, which widens at every step.
     */
   def unionByNameAll(dfs: Seq[DataFrame]): DataFrame = {
     require(dfs.nonEmpty, "unionByNameAll of empty sequence")
-    dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    if (dfs.size == 1) dfs.head
+    else if (typesConflict(dfs)) dfs.reduce(_.unionByName(_, allowMissingColumns = true))
+    else DatasetBridge.unionByName(dfs)
+  }
+
+  /** Whether some column name (matched under the session's case rule)
+    * has different types in different frames.
+    */
+  private def typesConflict(dfs: Seq[DataFrame]): Boolean = {
+    val caseSensitive = SQLConf.get.caseSensitiveAnalysis
+    val seen = scala.collection.mutable.Map.empty[String, DataType]
+    dfs.iterator.flatMap(_.schema.fields).exists { f =>
+      val key = if (caseSensitive) f.name else f.name.toLowerCase(java.util.Locale.ROOT)
+      !DataTypeUtils.sameType(seen.getOrElseUpdate(key, f.dataType), f.dataType)
+    }
   }
 }

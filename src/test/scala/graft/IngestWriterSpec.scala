@@ -22,6 +22,23 @@ class IngestWriterSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { CsvIngest.discover(empty) }
   }
 
+  test("discover and ingest take a file: URI directory") {
+    val dir = Files.createTempDirectory("graft-uri")
+    FakeData.generate(dir.toString, start = 1, end = 3, records = 4, seed = 6L,
+      maxOptional = 3)
+    Files.write(dir.resolve("notes.txt"), "not a csv".getBytes)
+    val uri = dir.toUri.toString
+    assert(uri.startsWith("file:"))
+    val found = CsvIngest.discover(uri)
+    assert(found.map(f => new java.io.File(new java.net.URI(f)).getName) ==
+      Seq("customers-1.csv", "customers-2.csv", "customers-3.csv"))
+    assert(CsvIngest.ingest(spark, uri, clock).count() ==
+      CsvIngest.ingest(spark, dir.toString, clock).count())
+    val empty = Files.createTempDirectory("graft-uri-empty").toUri.toString
+    val e = intercept[IllegalArgumentException] { CsvIngest.discover(empty) }
+    assert(e.getMessage.contains("No CSV files found"))
+  }
+
   test("ingest: drift CSVs union with normalized names, created_at first") {
     val dir = Files.createTempDirectory("graft-csv").toString
     FakeData.generate(dir, start = 1, end = 5, records = 10, seed = 42L,

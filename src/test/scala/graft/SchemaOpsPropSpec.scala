@@ -87,4 +87,40 @@ class SchemaOpsPropSpec extends AnyFunSuite {
       assert(out.select("id").collect().map(_.getInt(0)).toSet == Set(1, 2, 3))
     }
   }
+
+  test("unionByNameAll equals the pairwise unionByName reduce: column order, types, rows") {
+    import org.apache.spark.sql.Row
+    val r = new Random(23)
+    val names = Vector("k", "a", "b", "c", "d")
+    val types = Vector[DataType](IntegerType, DoubleType, StringType)
+    def value(t: DataType, i: Int): Any = t match {
+      case IntegerType => i
+      case DoubleType  => i + 0.5
+      case _           => i.toString
+    }
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    for (round <- 1 to 16) {
+      // even rounds: a column's type may differ between frames (int,
+      // double and string widen against each other); odd rounds: one
+      // type per column. Names sometimes differ only in case.
+      val conflicts = round % 2 == 0
+      val fixed = names.map(_ -> types(r.nextInt(types.size))).toMap
+      val frames = Vector.fill(2 + r.nextInt(5)) {
+        val fields = r.shuffle(names).take(1 + r.nextInt(names.size)).map { n =>
+          StructField(if (r.nextInt(4) == 0) n.toUpperCase else n,
+            if (conflicts) types(r.nextInt(types.size)) else fixed(n))
+        }
+        val rows = Seq.tabulate(1 + r.nextInt(3))(i =>
+          Row(fields.map(f => value(f.dataType, i)): _*))
+        spark.createDataFrame(java.util.List.of(rows: _*), StructType(fields))
+      }
+      val want = frames.reduce(_.unionByName(_, allowMissingColumns = true))
+      val got = SchemaOps.unionByNameAll(frames)
+      val shapes = frames.map(_.schema.simpleString)
+      assert(got.schema == want.schema, shapes)
+      assert(got.collect().toSeq == want.collect().toSeq, shapes)
+      assert(nodes(got) <= nodes(want), shapes)
+    }
+  }
 }
