@@ -3951,7 +3951,8 @@ object Queries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val sqlSurfaceQueries: Seq[QueryDef] = Seq(
-    // SQL MERGE INTO statement end-to-end (GraftSqlDmlRule): the SAME
+    // SQL MERGE INTO statement end-to-end (native row-level rewrite of
+    // a graft temp view, GraftViewDml): the SAME
     // conditional-clause scenario snap_merge_conditional runs through
     // the Scala API, here driven entirely by spark.sql against a graft
     // temp view — first-match-wins clauses, NULL condition = keep —

@@ -55,10 +55,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * arbitrary ON conditions, with Spark's built-in MERGE cardinality
   * check. Filter-convertible DELETEs shortcut through the optimizer's
   * metadata-delete rule onto [[SnapshotTable.deleteRouted]] (the
-  * `graft.delete.mode` property). The injected resolution rule
-  * ([[graft.plans.GraftSqlDmlRule]]) remains only as the DSv1
-  * temp-view shim — v2 statements never reach it (the analyzer's
-  * Resolution batch rewrites them first).
+  * `graft.delete.mode` property). `USING graft` temp views resolve to
+  * the same tables, so the same rewrites plan their DML.
   */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog {

@@ -3,10 +3,11 @@ package graft.catalog
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The catalog's v2 `FunctionCatalog` functions: the hidden-partition
   * transforms (`months`, `bucket`) exposed as bound scalar functions,
@@ -130,4 +131,21 @@ object GraftFunctions {
         (((h % n) + n) % n).toInt
       }
   }
+}
+
+/** The partition transforms alone, as a `FunctionCatalog`: what a
+  * path-addressed relation (a `USING graft` temp view — no catalog of
+  * its own) carries into a row-level write, so the write's
+  * transform-clustered distribution resolves exactly as it does for
+  * `graft.db.t` ([[graft.plans.GraftViewDml]] attaches it).
+  */
+final class GraftFunctionCatalog extends FunctionCatalog {
+  override def name(): String = "graft_functions"
+  override def initialize(name: String,
+      options: CaseInsensitiveStringMap): Unit = ()
+  override def listFunctions(namespace: Array[String]): Array[Identifier] =
+    GraftFunctions.list
+  override def loadFunction(ident: Identifier): UnboundFunction =
+    GraftFunctions.load(ident).getOrElse(throw new org.apache.spark.sql
+      .catalyst.analysis.NoSuchFunctionException(name(), ident.toString))
 }

@@ -24,14 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** NATIVE DSv2 row-level operations (`SupportsRowLevelOperations` /
-  * `SupportsDelta`) for graft catalog tables: Spark's OWN analyzer
-  * rewrites (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
+  * `SupportsDelta`) for graft tables: Spark's OWN analyzer rewrites
+  * (`RewriteDeleteFromTable` / `RewriteUpdateTable` /
   * `RewriteMergeIntoTable`) plan SQL `DELETE` / `UPDATE` / `MERGE
-  * INTO` against `graft.db.t` — full SQL surface, including subqueries
-  * in predicates and arbitrary `ON` conditions the injected
-  * resolution rule (`graft.plans.GraftSqlDmlRule`, now the DSv1
-  * temp-view shim) never supported, plus Spark's built-in MERGE
-  * cardinality check.
+  * INTO` against `graft.db.t` and `USING graft` temp views alike (the
+  * view through [[graft.plans.GraftViewDml]]) — full SQL surface,
+  * including subqueries in predicates and arbitrary `ON` conditions,
+  * plus Spark's built-in MERGE cardinality check.
   *
   * The operation is DELTA-based (merge-on-read): the scan exposes
   * each row's identity as two metadata columns — the data file URI
@@ -54,7 +53,7 @@ import org.apache.spark.util.SerializableConfiguration
   * ordinary v2 filters (manifest stats prune candidate files); MERGE
   * reads the target without file-level runtime pruning (the join
   * filters rows, not files) — the manifest-pruned key-range MERGE
-  * remains available through the Scala API and DSv1 views. Positions
+  * remains available through the Scala API. Positions
   * are valid only against the scanned snapshot: the commit pins the
   * base version and raises [[SnapshotConflictException]] on any
   * concurrent commit.
@@ -377,6 +376,7 @@ final class GraftDeltaWriter(
     var current: Option[(Option[String], OutputWriter)] = None
     private var stats: InlineFileStats = null
     private var currentRel: String = null
+    private var manifestPart: Option[String] = None
     val written = Seq.newBuilder[String]
     val entries = Seq.newBuilder[DataFileEntry]
     def write(row: InternalRow, part: Option[String]): Unit =
@@ -386,9 +386,10 @@ final class GraftDeltaWriter(
           w.write(row)
         case other =>
           closeCurrent(other.map(c => (c._1, c._2)))
-          val (w, rel) = openWriter(part, this)
+          val (w, rel, mp) = openWriter(part, this)
           current = Some((part, w))
           currentRel = rel
+          manifestPart = mp
           stats = new InlineFileStats(rowSchema, bloom, ndv, zoneId)
           stats.update(row)
           w.write(row)
@@ -398,10 +399,9 @@ final class GraftDeltaWriter(
       case (part, w) =>
         w.close()
         // manifest stats computed inline with the write — the commit
-        // adopts these entries without any read-back job. Null and
-        // empty partition values both live in the default partition.
+        // adopts these entries without any read-back job
         entries += DataFileEntry(currentRel,
-          part.filter(_.nonEmpty), stats.rows, stats.finish(),
+          manifestPart, stats.rows, stats.finish(),
           seq = -1L,
           bytes = fsys.getFileStatus(
             new Path(new Path(rootStr), currentRel)).getLen)
@@ -465,24 +465,29 @@ final class GraftDeltaWriter(
   override def reinsert(meta: InternalRow, row: InternalRow): Unit =
     updLane.write(row, partOf(row))
 
+  /** A new image file for `part`: the writer, its manifest-relative
+    * path, and the partition value its manifest entry records.
+    */
   private def openWriter(part: Option[String],
-      lane: Lane): (OutputWriter, String) = {
+      lane: Lane): (OutputWriter, String, Option[String]) = {
     val (factory, conf) = dataFactory.getOrElse(sys.error(
       s"$dataRel: row image arrived for a delete-only write"))
     // Spark's own partition-segment rendering (Hive %XX escaping;
     // null/empty → __HIVE_DEFAULT_PARTITION__), so these directories
-    // decode exactly like a partitionBy batch's
-    val dirRel = partExpr match {
-      case None => dataRel
-      case Some(_) => s"$dataRel/" + ExternalCatalogUtils
-        .getPartitionPathString(SnapshotTable.PartCol, part.orNull)
-    }
+    // decode exactly like a partitionBy batch's — and the manifest
+    // records the segment decoded back, as StagedWrite does: null,
+    // empty and a literal __HIVE_DEFAULT_PARTITION__ all read as None
+    val seg = partExpr.map(_ => ExternalCatalogUtils
+      .getPartitionPathString(SnapshotTable.PartCol, part.orNull))
+    val dirRel = seg.map(x => s"$dataRel/$x").getOrElse(dataRel)
+    val manifestPart = seg.flatMap(x => SnapshotTable.decodePartitionValue(
+      x.substring(SnapshotTable.PartCol.length + 1)))
     val name = f"part-$partitionId%05d-$taskId-" +
       s"${UUID.randomUUID().toString.replace("-", "").take(8)}.parquet"
     lane.written += s"$dirRel/$name"
     (ParquetWriteBridge.newWriter(factory, conf.value,
       new Path(new Path(rootStr), s"$dirRel/$name").toString, rowSchema),
-      s"$dirRel/$name")
+      s"$dirRel/$name", manifestPart)
   }
 
   private def writeDv(bitmaps: mutable.HashMap[String,

@@ -15,28 +15,34 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The DSv2 `Table` for one graft snapshot table — what
-  * [[GraftCatalog.loadTable]] hands Spark, making `graft.db.t` a
-  * native catalog table: scans plan through Spark's own v2 pushdown
+  * [[GraftCatalog.loadTable]] and the `graft` data source
+  * ([[graft.sources.GraftDataSource]]) hand Spark, making `graft.db.t`
+  * a native catalog table and `format("graft")` / `USING graft` views
+  * the same table: scans plan through Spark's own v2 pushdown
   * (manifest pruning via the same skip-only translation as every
   * other read path), `INSERT INTO` / `INSERT OVERWRITE` /
   * `df.writeTo(...)` route to the table's atomic commits, `DELETE
   * FROM` with pushable predicates runs as a native v2 metadata/COW
   * delete, and `TRUNCATE TABLE` is an atomic overwrite-to-empty.
-  * Time travel (`VERSION AS OF` / `TIMESTAMP AS OF`) arrives as a
-  * `pinned` version resolved by the catalog — a pinned table refuses
-  * writes, mirroring [[graft.sources.GraftRelation]].
+  * Time travel (`VERSION AS OF` / `TIMESTAMP AS OF`, or the data
+  * source's `versionAsOf` / `tag` / `timestampAsOf`) arrives as a
+  * `pinned` version — a pinned table refuses writes.
   *
-  * The scan and write surfaces bridge through `V1Scan` / `V1Write` to
-  * the battle-tested [[SnapshotTable]] read/commit machinery: the
-  * physical plan below the bridge is Spark's own vectorized parquet
-  * scan over manifest-pruned files (the DataFrame returned by
-  * `scanFor`), so the v2 seam adds catalog-native addressing without
-  * forking the execution path the DSv1 relation already certifies.
+  * Scans plan natively ([[GraftBatchScan]]) whenever the snapshot
+  * allows; otherwise they bridge through `V1Scan` to the
+  * [[SnapshotTable]] read machinery, whose physical plan below the
+  * bridge is Spark's own vectorized parquet scan over manifest-pruned
+  * files (the DataFrame returned by `scanFor`). Writes bridge through
+  * `V1Write` to the table's commits.
+  *
+  * `streaming = false` (path-addressed tables) leaves micro-batch reads
+  * and streaming writes to the data source's v1 source and sink.
   */
 final class GraftV2Table(
     val table: SnapshotTable,
     ident: String,
-    val pinned: Option[Long]) extends Table
+    val pinned: Option[Long],
+    streaming: Boolean = true) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
@@ -58,19 +64,12 @@ final class GraftV2Table(
   override def properties(): java.util.Map[String, String] =
     table.publishedSnapshot().properties.asJava
 
-  override def capabilities(): JSet[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
+  override def capabilities(): JSet[TableCapability] = {
+    val batch = Set(TableCapability.BATCH_READ,
+      TableCapability.V1_BATCH_WRITE,
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.TRUNCATE,
-      // `spark.readStream.table("graft.db.t")` — appends-only
-      // micro-batch tail of the table ([[graft.streaming
-      // .GraftTableStream]]); the CDC source stays the
-      // retraction-aware surface
-      TableCapability.MICRO_BATCH_READ,
-      // `df.writeStream.toTable("graft.db.t")` — executor-parallel
-      // exactly-once epoch appends ([[GraftStreamingWrite]])
-      TableCapability.STREAMING_WRITE,
       // MERGE INTO … WITH SCHEMA EVOLUTION: Spark's
       // ResolveMergeIntoSchemaEvolution diffs the source schema
       // against ours, applies the AddColumn/UpdateColumnType changes
@@ -78,23 +77,34 @@ final class GraftV2Table(
       // the Scala merge path performs), and re-resolves the target —
       // so the native SQL MERGE grows the schema in-statement exactly
       // like SnapshotTable.merge does
-      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
+      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
+    val streams = Set(
+      // `spark.readStream.table("graft.db.t")` — appends-only
+      // micro-batch tail of the table ([[graft.streaming
+      // .GraftTableStream]]); the CDC source stays the
+      // retraction-aware surface
+      TableCapability.MICRO_BATCH_READ,
+      // `df.writeStream.toTable("graft.db.t")` — executor-parallel
+      // exactly-once epoch appends ([[GraftStreamingWrite]])
+      TableCapability.STREAMING_WRITE)
+    (if (streaming) batch ++ streams else batch).asJava
+  }
 
-  /** Same drift guard as the DSv1 relation: an unpinned table loaded
-    * before a schema-evolving commit must not serve rows disagreeing
-    * with the analyzed schema.
+  /** An unpinned table loaded before a schema-evolving commit must
+    * not serve rows disagreeing with the analyzed schema.
     */
   private[catalog] def guardSchemaDrift(): Unit = {
     def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
     require(pinned.nonEmpty || shape(table.schemaAt(None)) == shape(schema),
       s"snapshot table ${table.root} evolved its schema since this " +
-        "statement was analyzed — re-run the statement to pick up the " +
-        "new schema")
+        "statement was analyzed — re-run the statement (or re-create " +
+        "the view) to pick up the new schema")
   }
 
   private def requireWritable(op: String): Unit =
     require(pinned.isEmpty,
-      s"cannot $op a time-travel (VERSION/TIMESTAMP AS OF) table")
+      s"cannot $op a time-travel table (VERSION/TIMESTAMP AS OF, or " +
+        "versionAsOf / tag / timestampAsOf)")
 
   // ---------------------------------------------------------------- read
 
@@ -452,20 +462,17 @@ final class GraftV2Table(
 }
 
 /** One metadata table (`graft.db.\`t#history\`` / `#partitions` /
-  * `#files` / `#tags`) as a read-only v2 table — resolved fresh per
-  * scan so it always describes the CURRENT snapshot; metadata-sized by
-  * construction.
+  * `#files` / `#tags`, or the data source's `metadata` option) as a
+  * read-only v2 table — resolved fresh per scan so it always describes
+  * the CURRENT snapshot, even behind a long-lived temp view;
+  * metadata-sized by construction.
   */
 final class GraftMetadataV2Table(
     table: SnapshotTable,
     ident: String,
     kind: String) extends Table with SupportsRead {
 
-  // resolved ONCE per loadTable (i.e. per statement): schema() is
-  // called repeatedly during analysis and each df build re-reads the
-  // version log — freshness is per-statement either way, since the
-  // catalog loads a new instance for every statement
-  private lazy val frame: DataFrame = kind match {
+  private def frame: DataFrame = kind match {
     case "history" => table.historyDf()
     case "partitions" => table.partitionsDf()
     case "files" => table.filesDf()
@@ -476,7 +483,9 @@ final class GraftMetadataV2Table(
   }
 
   override def name(): String = ident
-  override def schema: StructType = frame.schema
+  // schema() is called repeatedly during analysis, and each frame build
+  // re-reads the version log: resolve it once per table instance
+  override lazy val schema: StructType = frame.schema
   override def partitioning(): Array[Transform] = Array.empty
   override def properties(): java.util.Map[String, String] =
     java.util.Collections.emptyMap()
@@ -490,9 +499,10 @@ final class GraftMetadataV2Table(
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T =
           new BaseRelation with TableScan {
+            private val df = frame
             override val sqlContext: SQLContext = context
-            override def schema: StructType = frame.schema
-            override def buildScan(): RDD[Row] = frame.rdd
+            override def schema: StructType = df.schema
+            override def buildScan(): RDD[Row] = df.rdd
           }.asInstanceOf[T]
       }
     }
@@ -500,8 +510,8 @@ final class GraftMetadataV2Table(
 
 /** The CDC change feed as a catalog table (`graft.db.\`t#changes\``):
   * `_change_type ∈ {insert, delete}` plus the table columns (updates
-  * surface as delete+insert pairs — the Delta CDF shape the V1
-  * `changesFrom` source serves). With `.option("updateImages",
+  * surface as delete+insert pairs — the Delta CDF shape the v1
+  * `changesFrom` stream source serves). With `.option("updateImages",
   * "true")` — or table property `graft.cdc.update-images=true` for
   * SQL-only consumers — the feed is served PER-COMMIT with
   * UPDATE/MERGE-matched rewrites labeled `update_preimage` /
@@ -519,21 +529,35 @@ final class GraftMetadataV2Table(
   * This is where the r15 tail's `skipNonAppends` dilemma resolves:
   * skip loses retractions, fail stops the pipeline — the change feed
   * represents them.
+  *
+  * A path-addressed feed (`format("graft").option("changesFrom", …)
+  * .option("changesTo", …)`) passes its `window` instead: both bounds
+  * resolve once, on first use, and the schema is the table's at
+  * `changesTo`. It is batch-only — `readStream` falls back to the v1
+  * source, which never asks for the window.
   */
 final class GraftChangesV2Table(
     table: SnapshotTable,
-    ident: String) extends Table with SupportsRead {
+    ident: String,
+    window: Option[() => GraftChangesV2Table.Window] = None)
+    extends Table with SupportsRead {
+
+  private lazy val pinned: Option[GraftChangesV2Table.Window] =
+    window.map(_())
 
   override def name(): String = ident
 
-  override val schema: StructType =
-    graft.streaming.GraftChangesSource.changeSchema(table.schemaAt(None))
+  override lazy val schema: StructType =
+    graft.streaming.GraftChangesSource.changeSchema(
+      table.schemaAt(pinned.map(_.to)))
 
   override def partitioning(): Array[Transform] = Array.empty
   override def properties(): java.util.Map[String, String] =
     java.util.Collections.emptyMap()
   override def capabilities(): JSet[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
+    (if (window.isEmpty)
+      Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    else Set(TableCapability.BATCH_READ)).asJava
 
   /** `changesFrom`/`changesTo` bound resolution, V1-source parity:
     * a version number, `earliest`, or a TAG name — plus the
@@ -560,6 +584,27 @@ final class GraftChangesV2Table(
     })
   }
 
+  /** Opt-in per-commit labeled feed (update_preimage /
+    * update_postimage): the read option wins; the table property sets
+    * a default for SQL-only consumers of the catalog table.
+    */
+  private def updateImages(options: CaseInsensitiveStringMap): Boolean =
+    Option(options.get("updateImages"))
+      .orElse(table.publishedSnapshot().properties
+        .get("graft.cdc.update-images"))
+      .exists(_.equalsIgnoreCase("true"))
+
+  /** The batch feed a scan with `options` reads, unprojected. */
+  private[catalog] def changesFrame(
+      options: CaseInsensitiveStringMap): DataFrame = {
+    val w = pinned.getOrElse(GraftChangesV2Table.Window(
+      versionOpt(options, "changesFrom").getOrElse(table.log.versions().head),
+      versionOpt(options, "changesTo").getOrElse(table.currentVersion()),
+      updateImages(options)))
+    if (w.updateImages) table.changesCdf(w.from, w.to)
+    else table.changes(w.from, w.to)
+  }
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder with SupportsPushDownRequiredColumns {
       private var required: StructType = schema
@@ -567,53 +612,65 @@ final class GraftChangesV2Table(
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
 
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = required
-
-        override def toMicroBatchStream(checkpointLocation: String)
-            : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-          val maxV = Option(options.get("maxVersionsPerTrigger")).map { v =>
-            val n = scala.util.Try(v.toLong).getOrElse(sys.error(
-              s"maxVersionsPerTrigger must be a positive number, got '$v'"))
-            require(n >= 1, s"maxVersionsPerTrigger must be >= 1, got $n")
-            n
-          }
-          new graft.streaming.GraftChangesTableStream(table, schema,
-            required, checkpointLocation, versionOpt(options, "changesFrom"),
-            maxV,
-            updateImages = Option(options.get("updateImages"))
-              .orElse(table.publishedSnapshot().properties
-                .get("graft.cdc.update-images"))
-              .exists(_.equalsIgnoreCase("true")))
-        }
-
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T =
-          new BaseRelation with TableScan {
-            override val sqlContext: SQLContext = context
-            override def schema: StructType = required
-            override def buildScan(): RDD[Row] = {
-              val from = versionOpt(options, "changesFrom")
-                .getOrElse(table.log.versions().head)
-              val to = versionOpt(options, "changesTo")
-                .getOrElse(table.currentVersion())
-              // opt-in per-commit labeled feed (update_preimage /
-              // update_postimage): read option wins; the table
-              // property sets a default for SQL-only consumers
-              val cdf = Option(options.get("updateImages"))
-                .orElse(table.publishedSnapshot().properties
-                  .get("graft.cdc.update-images"))
-                .exists(_.equalsIgnoreCase("true"))
-              val changes =
-                if (cdf) table.changesCdf(from, to)
-                else table.changes(from, to)
-              changes.select(required.fieldNames.toIndexedSeq.map(c =>
-                org.apache.spark.sql.functions.col(
-                  SnapshotTable.quoted(c))): _*).rdd
-            }
-          }.asInstanceOf[T]
-      }
+      override def build(): Scan =
+        new GraftChangesScan(GraftChangesV2Table.this, options, required)
     }
+
+  /** The streaming half of [[GraftChangesScan]]. */
+  private[catalog] def microBatchStream(options: CaseInsensitiveStringMap,
+      required: StructType, checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    val maxV = Option(options.get("maxVersionsPerTrigger")).map { v =>
+      val n = scala.util.Try(v.toLong).getOrElse(sys.error(
+        s"maxVersionsPerTrigger must be a positive number, got '$v'"))
+      require(n >= 1, s"maxVersionsPerTrigger must be >= 1, got $n")
+      n
+    }
+    new graft.streaming.GraftChangesTableStream(table, schema,
+      required, checkpointLocation, versionOpt(options, "changesFrom"),
+      maxV, updateImages = updateImages(options))
+  }
+}
+
+object GraftChangesV2Table {
+  /** A change-feed window `(from, to]`, served per-commit with update
+    * images when `updateImages`.
+    */
+  final case class Window(from: Long, to: Long, updateImages: Boolean)
+}
+
+/** A change-feed scan. [[graft.plans.GraftScanStrategy]] plans it as a
+  * native plan over [[frame]]; this `V1Scan` bridge is the fallback for
+  * shapes the strategy leaves alone.
+  */
+final class GraftChangesScan private[catalog] (
+    feed: GraftChangesV2Table,
+    options: CaseInsensitiveStringMap,
+    required: StructType) extends V1Scan {
+
+  /** The feed, built once per scan: adaptive execution re-plans the
+    * query after every stage, and a frame rebuilt each time (a labeled
+    * feed broadcasts fresh delete-vector positions) would never match
+    * the stages already run, so the query would re-plan forever.
+    */
+  private[graft] lazy val frame: DataFrame = feed.changesFrame(options)
+
+  override def readSchema(): StructType = required
+
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    feed.microBatchStream(options, required, checkpointLocation)
+
+  override def toV1TableScan[T <: BaseRelation with TableScan](
+      context: SQLContext): T =
+    new BaseRelation with TableScan {
+      override val sqlContext: SQLContext = context
+      override def schema: StructType = required
+      override def buildScan(): RDD[Row] =
+        frame.select(required.fieldNames.toIndexedSeq
+          .map(c => org.apache.spark.sql.functions.col(
+            SnapshotTable.quoted(c))): _*).rdd
+    }.asInstanceOf[T]
 }
 
 object GraftV2Table {

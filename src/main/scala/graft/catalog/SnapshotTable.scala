@@ -1266,12 +1266,11 @@ final class SnapshotTable private (
   private[graft] def schemaAt(version: Option[Long]): StructType =
     version.map(snapshotAt(_).schema).getOrElse(schema)
 
-  /** Scan hook for the `graft` Spark data source
-    * ([[graft.sources.GraftDataSource]]): read `version` (None =
-    * current) with already-translated source filters pruning files at
-    * the manifest. SKIP-ONLY — the caller (Catalyst, via
-    * `unhandledFilters`) re-applies every filter exactly, so pruning
-    * can never change results.
+  /** Scan hook for the `V1Scan` fallback of [[GraftV2Table]]: read
+    * `version` (None = current) with already-translated source filters
+    * pruning files at the manifest. SKIP-ONLY — the caller (Catalyst,
+    * which keeps every pushed filter as residual) re-applies every
+    * filter exactly, so pruning can never change results.
     */
   private[graft] def scanFor(version: Option[Long],
       filters: Seq[org.apache.spark.sql.sources.Filter],
@@ -4876,8 +4875,8 @@ object SnapshotTable {
   }
 
   /** Column names must be distinct CASE-INSENSITIVELY: field-id
-    * matching, stats maps and the scan strategy's by-name attribute
-    * remap (`GraftScanStrategy.build`) all key on names, and Spark's
+    * matching, stats maps and the native batch scan's by-name shape
+    * schemas ([[GraftBatchScan]]) all key on names, and Spark's
     * default case-insensitive resolution would make `V` vs `v`
     * ambiguous at query time anyway. Checked at table creation AND on
     * every evolved write schema, so a colliding batch fails fast with

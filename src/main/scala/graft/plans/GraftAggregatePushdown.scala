@@ -7,11 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter => LFilter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graftbridge.FilterBridge
 
 import graft.catalog.SnapshotTable.MetaAgg
-import graft.sources.GraftRelation
+import graft.catalog.GraftV2Table
 
 /** Aggregate pushdown into manifest metrics for SQL: a filterless,
   * ungrouped `COUNT(*)` / `COUNT(c)` / `MIN` / `MAX` / `SUM` over a
@@ -110,7 +109,7 @@ final case class GraftAggregatePushdown(session: SparkSession)
     * [[graft.catalog.StatsPruner.translateExact]]).
     */
   private def relationAndFilter(p: LogicalPlan)
-      : Option[(GraftSqlDml.GraftTarget,
+      : Option[(GraftV2Table,
         Seq[org.apache.spark.sql.sources.Filter])] = p match {
     case Project(projList, child)
         if projList.forall(_.isInstanceOf[AttributeReference]) =>
@@ -130,10 +129,10 @@ final case class GraftAggregatePushdown(session: SparkSession)
     case other => relationOf(other).map((_, Nil))
   }
 
-  private def relationOf(p: LogicalPlan): Option[GraftSqlDml.GraftTarget] =
+  private def relationOf(p: LogicalPlan): Option[GraftV2Table] =
     p match {
-      // ONE definition of "which plans are graft targets" (temp-view
-      // relation or DSv2 catalog table): GraftSqlDml.targetOf — this
+      // ONE definition of "which plans are graft tables" (catalog table
+      // or temp view): GraftSqlDml.targetOf — this
       // rule adds only the pushdown-specific attribute-projection hop.
       // Catalog relations are still visible here because this rule runs
       // in the operator-optimization batch, before the v2 scan pushdown

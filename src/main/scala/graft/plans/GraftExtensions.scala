@@ -91,12 +91,16 @@ object GraftExtensions {
     functions.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
-    // native physical planning for graft snapshot scans (kills the
-    // DSv1 RDD[Row] bridge; see GraftScanStrategy)
+    // native physical planning for graft change-feed scans (no
+    // RDD[Row] bridge; see GraftScanStrategy)
     ext.injectPlannerStrategy(session => GraftScanStrategy(session))
-    // SQL MERGE INTO / DELETE FROM / UPDATE on graft snapshot tables
-    // (post-hoc: after resolution, before the v2-only CheckAnalysis)
-    ext.injectPostHocResolutionRule(session => GraftSqlDmlRule(session))
+    // SQL MERGE INTO / DELETE FROM / UPDATE on graft temp views: drop
+    // the View node so Spark's own row-level rewrite (same Resolution
+    // batch) plans them
+    ext.injectResolutionRule(_ => GraftViewDml)
+    // dynamic partition overwrite onto the atomic partition swap
+    // (post-hoc: after the write's output columns are resolved)
+    ext.injectPostHocResolutionRule(_ => GraftDynamicOverwriteRule)
     // filterless COUNT/MIN/MAX over a graft relation → manifest answer
     ext.injectOptimizerRule(session => GraftAggregatePushdown(session))
     // native delta MERGE: source-derived key predicate → manifest file

@@ -3,88 +3,76 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, NamedExpression, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, Project}
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
-import org.apache.spark.sql.graftbridge.{ColumnBridge, FilterBridge}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.sources.{GraftChangesRelation, GraftRelation}
+import graft.catalog.GraftChangesScan
 
-/** Native physical planning for `graft` snapshot-table scans — the
-  * replacement for DSv1 `PrunedFilteredScan.buildScan`'s `RDD[Row]`
-  * bridge, which forced every scanned row through an
-  * InternalRow→Row→InternalRow round-trip and kept the scan outside
-  * WholeStageCodegen (a constant-factor tax on every SQL-path read at
-  * scale).
+/** Native physical planning for graft CHANGE-FEED scans
+  * ([[graft.catalog.GraftChangesV2Table]]: `graft.db.\`t#changes\``
+  * and `format("graft").option("changesFrom", …)`) — the replacement
+  * for the `V1Scan` bridge's `RDD[Row]`, which forces every row
+  * through an InternalRow→Row→InternalRow round-trip and keeps the
+  * scan outside WholeStageCodegen. Plain table reads need none of
+  * this: they plan through [[graft.catalog.GraftBatchScan]].
   *
-  * At physical-planning time the optimizer has settled filters directly
-  * above the relation, so this strategy sees the FINAL predicate set:
-  * it translates the conjuncts to `sources.Filter`s ([[org.apache.spark
-  * .sql.graftbridge.FilterBridge]] — the same translation parquet
-  * pushdown uses), prunes data files at the MANIFEST (min/max stats +
-  * Bloom sidecars, zero data I/O), and then plans the pruned read as a
-  * regular DataFrame — so the physical plan is Spark's own vectorized
-  * `FileScan parquet` (+ the merge-on-read anti-join and
-  * schema-evolution projections when applicable), fully inside codegen,
-  * with NO row bridge. Filters are re-applied exactly on top (manifest
-  * pruning stays skip-only and can never change results) and parquet
-  * row-group/page pruning gets the same predicates a second time for
-  * free.
+  * At physical-planning time the optimizer has settled the filters and
+  * projection directly above the scan, so this strategy plans
+  * `projects ∘ filters ∘ changes window` as one nested DataFrame — the
+  * changelog's own plan (Spark's vectorized parquet scans of the
+  * window's files, joins and unions), fully inside codegen, with NO
+  * row bridge. The window's pruning is version metadata; the filters
+  * re-apply on top exactly.
   *
-  * Filters or projections containing subqueries fall back to the DSv1
-  * path (`Nil` from this strategy): re-analyzing an already-optimized
-  * subquery inside the nested plan would be fragile, and such shapes
-  * are not the hot scan path.
+  * Filters or projections containing subqueries fall back to the
+  * bridge (`Nil` from this strategy): re-analyzing an
+  * already-optimized subquery inside the nested plan would be
+  * fragile, and such shapes are not the hot scan path.
   */
 final case class GraftScanStrategy(session: SparkSession)
     extends SparkStrategy with PredicateHelper {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Project(projects, LFilter(cond, lr: LogicalRelation))
-        if isGraft(lr) && eligible(projects :+ cond) =>
-      build(lr, projects, splitConjunctivePredicates(cond)).toSeq
-    case LFilter(cond, lr: LogicalRelation)
-        if isGraft(lr) && eligible(Seq(cond)) =>
-      build(lr, lr.output, splitConjunctivePredicates(cond)).toSeq
-    case Project(projects, lr: LogicalRelation)
-        if isGraft(lr) && eligible(projects) =>
-      build(lr, projects, Nil).toSeq
-    case lr: LogicalRelation if isGraft(lr) =>
-      build(lr, lr.output, Nil).toSeq
+    case Project(projects, LFilter(cond, ChangesScan(_, cs)))
+        if eligible(projects :+ cond) =>
+      build(cs, projects, splitConjunctivePredicates(cond)).toSeq
+    case LFilter(cond, ChangesScan(r, cs)) if eligible(Seq(cond)) =>
+      build(cs, r.output, splitConjunctivePredicates(cond)).toSeq
+    case Project(projects, ChangesScan(_, cs)) if eligible(projects) =>
+      build(cs, projects, Nil).toSeq
+    case ChangesScan(r, cs) => build(cs, r.output, Nil).toSeq
     case _ => Nil
   }
 
-  private def isGraft(lr: LogicalRelation): Boolean =
-    lr.relation.isInstanceOf[GraftRelation] ||
-      lr.relation.isInstanceOf[GraftChangesRelation]
+  /** A v2 scan relation over a graft change feed. */
+  private object ChangesScan {
+    def unapply(p: LogicalPlan)
+        : Option[(DataSourceV2ScanRelation, GraftChangesScan)] = p match {
+      case r: DataSourceV2ScanRelation => r.scan match {
+        case w: V1ScanWrapper => w.v1Scan match {
+          case cs: GraftChangesScan => Some((r, cs))
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
 
   private def eligible(exprs: Seq[Expression]): Boolean =
     !exprs.exists(_.exists(_.isInstanceOf[SubqueryExpression]))
 
-  /** Plan `projects ∘ filters ∘ scan(pruned files)` as a nested
-    * DataFrame and re-key its output to the exprIds the outer plan
-    * expects. Returns None — falling back to the DSv1 `buildScan`
-    * bridge, which resolves by position rather than name — when the
-    * name-based remap would be unsafe: a referenced column missing
-    * from the snapshot read, or duplicate output names making the
-    * remap ambiguous (unreachable for writer-normalized schemas, but
-    * a fallback beats failing the whole query at planning time).
+  /** Plan `projects ∘ filters ∘ changes` as a nested DataFrame and
+    * re-key its output to the exprIds the outer plan expects. Returns
+    * None — falling back to the bridge, which resolves by position
+    * rather than name — when the name-based remap would be unsafe: a
+    * referenced column missing from the feed, or duplicate output
+    * names making the remap ambiguous.
     */
-  private def build(lr: LogicalRelation, projects: Seq[NamedExpression],
+  private def build(cs: GraftChangesScan, projects: Seq[NamedExpression],
       conds: Seq[Expression]): Option[SparkPlan] = {
-    val pruned = lr.relation match {
-      case gr: GraftRelation =>
-        gr.guardSchemaDrift()
-        // deterministic conjuncts with a source-filter form drive
-        // manifest pruning; everything else simply doesn't prune
-        // (skip-only)
-        val srcFilters =
-          conds.filter(_.deterministic).flatMap(FilterBridge.translate)
-        gr.table.scanFor(gr.pinned, srcFilters)
-      // the changelog's own pruning is version-window metadata; filters
-      // just re-apply on top like everything else
-      case cr: GraftChangesRelation => cr.changesDf
-      case other => sys.error(s"not a graft relation: $other")
-    }
+    val pruned = cs.frame
     val outAttrs = pruned.queryExecution.analyzed.output
     val byName = outAttrs.map(a => a.name -> a).toMap
     val hasDupNames = byName.size != outAttrs.size

@@ -1,11 +1,18 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext}
-import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{StructField, StructType}
+import java.util.{Map => JMap}
 
-import graft.catalog.SnapshotTable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.catalog.{GraftChangesV2Table, GraftMetadataV2Table, GraftV2Table, SnapshotTable}
 
 /** Spark SQL data source for [[graft.catalog.SnapshotTable]] — the
   * integration that makes the snapshot layer consumable WITHOUT the
@@ -22,16 +29,20 @@ import graft.catalog.SnapshotTable
   *   USING graft OPTIONS (path '/warehouse/events')
   * }}}
   *
-  * Implemented as a DSv1 `PrunedFilteredScan`: Catalyst pushes the
-  * query's source filters down, the relation prunes data FILES at the
-  * manifest (min/max stats + Bloom sidecars — [[graft.catalog
-  * .StatsPruner]], the same path `readWhere` uses), and every filter is
-  * declared unhandled so Catalyst re-applies them exactly — manifest
-  * pruning stays skip-only and can never change results. Merge-on-read
-  * equality deletes and field-id schema evolution apply as on every
-  * other read path.
+  * A DSv2 `TableProvider`: batch reads resolve to the SAME tables
+  * [[graft.catalog.GraftCatalog]] serves — [[GraftV2Table]] (pinned by
+  * `versionAsOf` / `tag` / `timestampAsOf`, or following a `branch`),
+  * [[GraftChangesV2Table]] for the `changesFrom` / `changesTo` change
+  * feed and [[GraftMetadataV2Table]] for `metadata` — so scans plan
+  * through the native batch scan, and SQL DELETE / UPDATE / MERGE on a
+  * temp view run as Spark's own row-level rewrite
+  * ([[graft.plans.GraftViewDml]] only unwraps the view). Writes and
+  * streams stay on the v1 interfaces below: a path-addressed table
+  * advertises neither batch nor streaming writes nor micro-batch
+  * reads, so `save()`, `readStream` and `writeStream` fall back to
+  * them.
   */
-final class GraftDataSource extends RelationProvider
+final class GraftDataSource extends TableProvider
     with CreatableRelationProvider with DataSourceRegister
     with StreamSourceProvider with StreamSinkProvider {
 
@@ -42,9 +53,28 @@ final class GraftDataSource extends RelationProvider
       sys.error("the graft data source requires a path: " +
         ".load(root) / .save(root) or OPTIONS (path '...')"))
 
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
+  /** Writes hand [[getTable]] their frame's schema instead of asking
+    * for inference, so a `save()` to a path with no table yet reaches
+    * the fallback to [[createRelation]] (which creates it).
+    */
+  override def supportsExternalMetadata(): Boolean = true
+
+  /** Called only for reads without a user schema: a missing table
+    * fails here, eagerly, with [[SnapshotTable.load]]'s message. The
+    * table [[getTable]] routes to declares the schema actually read.
+    */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    SnapshotTable.load(SparkSession.active,
+      pathOf(CaseInsensitiveMap(options.asScala.toMap))).schemaAt(None)
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: JMap[String, String]): Table = {
+    val parameters = CaseInsensitiveMap(properties.asScala.toMap)
+    val spark = SparkSession.active
     val path = pathOf(parameters)
+    if (!SnapshotTable.exists(spark, path))
+      return new GraftAbsentTable(path, schema)
+    val base = SnapshotTable.load(spark, path)
     def longOpt(key: String, label: String): Option[Long] =
       parameters.get(key).map { v =>
         try v.toLong
@@ -64,51 +94,16 @@ final class GraftDataSource extends RelationProvider
             k == "paths"),
           "metadata tables take no other options (they describe the " +
             "CURRENT snapshot; time travel does not apply)")
-        return new GraftMetadataRelation(sqlContext, path, kind.toLowerCase)
+        return new GraftMetadataV2Table(base, path, kind.toLowerCase)
       case None => ()
     }
-    // CDC changelog surface: changesFrom/changesTo expose
-    // SnapshotTable.changes(from, to) to SQL-only consumers. Bounds
-    // are version numbers or TAG NAMES ("changes since the corpus the
-    // model trained on") — digits always mean a version; all-digit tag
-    // names are refused at tag() creation, so the routing is total.
-    def boundOpt(key: String): Option[Long] = parameters.get(key).map { v =>
-      scala.util.Try(v.toLong).getOrElse {
-        val tbl = SnapshotTable.load(sqlContext.sparkSession, path)
-        tbl.tags().getOrElse(v, sys.error(
-          s"$key: '$v' is neither a version number nor a tag at $path; " +
-            s"tags: ${tbl.tags().keys.mkString(", ")}"))
-      }
-    }
-    // Delta startingTimestamp analog: <bound>Timestamp resolves to the
-    // latest version committed at or before it (readAsOf semantics —
-    // "changes SINCE the corpus as of T"). Epoch millis or ISO-8601.
-    def tsBoundOpt(key: String, versionKey: String): Option[Long] = {
-      require(!(parameters.contains(key) && parameters.contains(versionKey)),
-        s"pass $versionKey OR $key, not both")
-      parameters.get(key).map { v =>
-        val ms = scala.util.Try(v.toLong).getOrElse(
-          scala.util.Try(java.time.Instant.parse(v).toEpochMilli).getOrElse(
-            sys.error(s"$key must be epoch millis or ISO-8601, got '$v'")))
-        SnapshotTable.load(sqlContext.sparkSession, path).versionAsOf(ms)
-      }
-    }
-    // evaluate both variants eagerly: the conflict check must fire
-    // even when the version-keyed option would win an orElse
-    val fromTs = tsBoundOpt("changesfromtimestamp", "changesfrom")
-    val toTs = tsBoundOpt("changestotimestamp", "changesto")
-    (boundOpt("changesfrom").orElse(fromTs),
-      boundOpt("changesto").orElse(toTs)) match {
-      case (Some(f), Some(t)) =>
-        require(Seq("versionasof", "tag", "timestampasof")
-          .forall(k => !parameters.contains(k)),
-          "changesFrom/changesTo cannot combine with versionAsOf/tag/timestampAsOf")
-        return new GraftChangesRelation(sqlContext, path, f, t,
-          updateImages = parameters.get("updateimages")
-            .exists(_.equalsIgnoreCase("true")))
-      case (None, None) => ()
-      case _ => sys.error("pass BOTH changesFrom and changesTo (or neither)")
-    }
+    // CDC changelog surface: the window resolves when the feed's schema
+    // is first needed (a batch load), never for a readStream, which
+    // falls back to the v1 source with its own option checks
+    if (Seq("changesfrom", "changesto", "changesfromtimestamp",
+        "changestotimestamp").exists(parameters.contains))
+      return new GraftChangesV2Table(base, path,
+        Some(() => changesWindow(base, path, parameters)))
     val version = longOpt("versionasof", "versionAsOf")
     val tag = parameters.get("tag")
     // branch 'name': the view IS the branch — reads see the branch
@@ -132,7 +127,60 @@ final class GraftDataSource extends RelationProvider
     require(branch.isEmpty || Seq(version, tag, ts).forall(_.isEmpty),
       "branch cannot combine with versionAsOf/tag/timestampAsOf " +
         "(time travel WITHIN a branch: read the branch handle's history)")
-    new GraftRelation(sqlContext, path, version, tag, ts, branch)
+    val table = branch.map(base.branch).getOrElse(base)
+    // resolved once, here: a tag through the ref, a timestamp to the
+    // latest snapshot at or before it (None = follow current)
+    val pinned = (tag, ts) match {
+      case (Some(t), _) => Some(table.tags().getOrElse(t, sys.error(
+        s"no tag '$t' at $path; tags: ${table.tags().keys.mkString(", ")}")))
+      case (None, Some(ms)) => Some(table.versionAsOf(ms))
+      case _ => version
+    }
+    new GraftV2Table(table, path, pinned, streaming = false)
+  }
+
+  /** `changesFrom` / `changesTo` (or their `…Timestamp` variants) as a
+    * pinned window. Bounds are version numbers or TAG NAMES ("changes
+    * since the corpus the model trained on") — digits always mean a
+    * version; all-digit tag names are refused at tag() creation, so the
+    * routing is total.
+    */
+  private def changesWindow(base: SnapshotTable, path: String,
+      parameters: Map[String, String]): GraftChangesV2Table.Window = {
+    def boundOpt(key: String): Option[Long] = parameters.get(key).map { v =>
+      scala.util.Try(v.toLong).getOrElse {
+        base.tags().getOrElse(v, sys.error(
+          s"$key: '$v' is neither a version number nor a tag at $path; " +
+            s"tags: ${base.tags().keys.mkString(", ")}"))
+      }
+    }
+    // Delta startingTimestamp analog: <bound>Timestamp resolves to the
+    // latest version committed at or before it (readAsOf semantics —
+    // "changes SINCE the corpus as of T"). Epoch millis or ISO-8601.
+    def tsBoundOpt(key: String, versionKey: String): Option[Long] = {
+      require(!(parameters.contains(key) && parameters.contains(versionKey)),
+        s"pass $versionKey OR $key, not both")
+      parameters.get(key).map { v =>
+        val ms = scala.util.Try(v.toLong).getOrElse(
+          scala.util.Try(java.time.Instant.parse(v).toEpochMilli).getOrElse(
+            sys.error(s"$key must be epoch millis or ISO-8601, got '$v'")))
+        base.versionAsOf(ms)
+      }
+    }
+    // evaluate both variants eagerly: the conflict check must fire
+    // even when the version-keyed option would win an orElse
+    val fromTs = tsBoundOpt("changesfromtimestamp", "changesfrom")
+    val toTs = tsBoundOpt("changestotimestamp", "changesto")
+    (boundOpt("changesfrom").orElse(fromTs),
+      boundOpt("changesto").orElse(toTs)) match {
+      case (Some(f), Some(t)) =>
+        require(Seq("versionasof", "tag", "timestampasof")
+          .forall(k => !parameters.contains(k)),
+          "changesFrom/changesTo cannot combine with versionAsOf/tag/timestampAsOf")
+        GraftChangesV2Table.Window(f, t, updateImages =
+          parameters.get("updateimages").exists(_.equalsIgnoreCase("true")))
+      case _ => sys.error("pass BOTH changesFrom and changesTo (or neither)")
+    }
   }
 
   /** Write side: `df.write.format("graft").mode(...).save(root)`.
@@ -143,12 +191,12 @@ final class GraftDataSource extends RelationProvider
     * ErrorIfExists/Ignore follow their SaveMode contracts against
     * table EXISTENCE.
     */
-  override def createRelation(sqlContext: SQLContext,
+  override def createRelation(ctx: SQLContext,
       mode: org.apache.spark.sql.SaveMode,
       parameters: Map[String, String],
       data: org.apache.spark.sql.DataFrame): BaseRelation = {
     import org.apache.spark.sql.SaveMode._
-    val spark = sqlContext.sparkSession
+    val spark = ctx.sparkSession
     val path = pathOf(parameters)
     // branch 'name' on the WRITE side too: the commit lands on the
     // branch line (a silently-ignored option here would publish
@@ -174,7 +222,12 @@ final class GraftDataSource extends RelationProvider
         case _ => () // Ignore / ErrorIfExists on existing: no write
       }
     }
-    new GraftRelation(sqlContext, path, None, None, None, branch)
+    // Spark only recaches by this relation; reads go through getTable
+    val written = data.schema
+    new BaseRelation {
+      override val sqlContext: SQLContext = ctx
+      override val schema: StructType = written
+    }
   }
 
   /** Streaming read: `spark.readStream.format("graft")
@@ -305,154 +358,13 @@ final class GraftDataSource extends RelationProvider
   }
 }
 
-final class GraftRelation(
-    override val sqlContext: SQLContext,
-    root: String,
-    versionAsOf: Option[Long],
-    tag: Option[String],
-    timestampAsOf: Option[Long] = None,
-    branch: Option[String] = None) extends BaseRelation
-    with PrunedFilteredScan with InsertableRelation {
-
-  /** The addressed line: the table's main log, or a named branch's —
-    * every read AND write through this relation follows it.
-    */
-  private[graft] val table = {
-    val base = SnapshotTable.load(sqlContext.sparkSession, root)
-    branch.map(base.branch).getOrElse(base)
-  }
-
-  /** Resolved once at relation creation: the version this relation
-    * reads (a tag resolves through the ref, a timestamp to the latest
-    * snapshot at or before it; None = follow current).
-    */
-  private[graft] val pinned: Option[Long] = (tag, timestampAsOf) match {
-    case (Some(t), _) => Some(table.tags().getOrElse(t,
-      sys.error(s"no tag '$t' at $root; tags: ${table.tags().keys.mkString(", ")}")))
-    case (None, Some(ms)) => Some(table.versionAsOf(ms))
-    case _ => versionAsOf
-  }
-
-  override val schema: StructType = table.schemaAt(pinned)
-
-  /** Manifest-exact table size estimate (row count × the schema's
-    * default width): without it `BaseRelation` reports
-    * `spark.sql.defaultSizeInBytes` (= effectively infinite) and a
-    * snapshot-table side of a join can NEVER auto-broadcast, however
-    * small. Row counts come from the manifests (zero data I/O), minus
-    * committed delete-vector cardinalities — the estimate only rounds
-    * up (equality deletes are not subtracted), so an oversized table
-    * never broadcasts by accident.
-    */
-  override def sizeInBytes: Long = {
-    val rows = table.scanEstimate(pinned, Nil)
-    rows * math.max(1, schema.defaultSize)
-  }
-
-  /** All filters stay Catalyst's responsibility — this relation uses
-    * them ONLY to skip files, so its row output may over-approximate
-    * and the exact semantics (incl. NULL handling) remain with the
-    * engine's own FilterExec.
-    */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  /** A current-reading relation (no pin) follows the table, so new
-    * commits ARE visible — but a schema-evolving commit after the
-    * relation was analyzed would make rows disagree with the declared
-    * schema (silent corruption or a cast crash). Detect it and fail
-    * with the remedy instead. Shared by [[buildScan]] (DSv1 fallback)
-    * and [[graft.plans.GraftScanStrategy]] (the native plan path).
-    */
-  private[graft] def guardSchemaDrift(): Unit = {
-    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    require(pinned.nonEmpty || shape(table.schemaAt(None)) == shape(schema),
-      s"snapshot table at $root evolved its schema since this relation " +
-        "was created — re-create the view (or re-run spark.read) to " +
-        "pick up the new schema")
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    guardSchemaDrift()
-    val df = table.scanFor(pinned, filters.toIndexedSeq)
-    // empty projection (e.g. COUNT(*)) still needs the row multiset
-    val projected =
-      if (requiredColumns.isEmpty) df.select()
-      else df.select(requiredColumns.toIndexedSeq.map(c =>
-        org.apache.spark.sql.functions.col(
-          graft.catalog.SnapshotTable.quoted(c))): _*)
-    projected.rdd
-  }
-
-  /** SQL `INSERT INTO` / `INSERT OVERWRITE` on a graft temp view:
-    * atomic append or full-table overwrite (DSv1 overwrite contract).
-    */
-  override def insert(data: org.apache.spark.sql.DataFrame,
-      overwrite: Boolean): Unit = {
-    require(pinned.isEmpty, "cannot INSERT into a time-travel " +
-      "(versionAsOf / tag / timestampAsOf) relation")
-    if (overwrite) table.overwrite(data) else table.append(data)
-    ()
-  }
-}
-
-/** CDC changelog as a SQL relation: `spark.read.format("graft")
-  * .option("changesFrom", 2).option("changesTo", 4).load(root)` (or
-  * the OPTIONS form of CREATE TEMPORARY VIEW) surfaces
-  * [[graft.catalog.SnapshotTable.changes]] — `_change_type ∈ {insert,
-  * delete}` plus the table columns at `changesTo`'s schema — to
-  * SQL-only incremental consumers. Versions are pinned at relation
-  * creation, so repeated queries over one view read one consistent
-  * window. [[graft.plans.GraftScanStrategy]] plans it natively; this
-  * DSv1 `buildScan` is the fallback for subquery shapes. With
-  * `updateImages 'true'` the window is served per-commit with
-  * Delta-CDF labels ([[graft.catalog.SnapshotTable.changesCdf]]) —
-  * V2 `#changes` option parity for SQL-only consumers.
+/** A `save()` target with no table yet: it has no capabilities, so
+  * every save mode falls back to [[GraftDataSource.createRelation]],
+  * which creates the table.
   */
-final class GraftChangesRelation(
-    override val sqlContext: SQLContext,
-    root: String,
-    fromVersion: Long,
-    toVersion: Long,
-    updateImages: Boolean = false) extends BaseRelation with TableScan {
-
-  private[graft] val table = SnapshotTable.load(sqlContext.sparkSession, root)
-
-  private[graft] def changesDf: org.apache.spark.sql.DataFrame =
-    if (updateImages) table.changesCdf(fromVersion, toVersion)
-    else table.changes(fromVersion, toVersion)
-
-  override val schema: StructType = StructType(
-    StructField("_change_type", org.apache.spark.sql.types.StringType,
-      nullable = false) +: table.schemaAt(Some(toVersion)).fields)
-
-  override def buildScan(): RDD[Row] = changesDf.rdd
-}
-
-/** One metadata table (`history` / `partitions` / `files` / `tags`)
-  * of a graft snapshot table as a relation — resolved fresh on every
-  * scan so a long-lived temp view always describes the CURRENT
-  * snapshot. Metadata-sized by construction (rows ≈ commits, files, or
-  * partitions — never data rows).
-  */
-final class GraftMetadataRelation(
-    override val sqlContext: SQLContext,
-    root: String,
-    kind: String) extends BaseRelation with TableScan {
-
-  private def df: org.apache.spark.sql.DataFrame = {
-    val t = SnapshotTable.load(sqlContext.sparkSession, root)
-    kind match {
-      case "history" => t.historyDf()
-      case "partitions" => t.partitionsDf()
-      case "files" => t.filesDf()
-      case "tags" => t.tagsDf()
-      case "branches" => t.branchesDf()
-      case other => sys.error(s"unknown graft metadata table '$other' — " +
-        "one of: history, partitions, files, tags, branches")
-    }
-  }
-
-  override def schema: StructType = df.schema
-  override def buildScan(): RDD[Row] = df.rdd
+private final class GraftAbsentTable(path: String,
+    override val schema: StructType) extends Table {
+  override def name(): String = path
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.Collections.emptySet()
 }

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
 
 /** `Dataset.ofRows` — wrap an analyzed logical plan back into a
-  * DataFrame — is `private[sql]`. Graft's SQL row-level DML rule
-  * ([[graft.plans.GraftSqlDml]]) needs exactly this to hand the parsed
-  * MERGE source query to the Scala merge API; [[unionByName]] uses it
-  * to hand back a union analyzed once. No Spark internals are modified.
+  * DataFrame — is `private[sql]`. The dynamic partition overwrite
+  * ([[graft.plans.GraftDynamicOverwriteCommand]]) needs exactly this
+  * to hand the analyzed INSERT query to the table's commit;
+  * [[unionByName]] uses it to hand back a union analyzed once. No
+  * Spark internals are modified.
   */
 object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

@@ -1410,6 +1410,31 @@ class SnapshotTableSpec extends AnyFunSuite {
       .as[Long].head() == 9L)
     intercept[RuntimeException](spark.read.format("graft")
       .option("tag", "nope").load(root))
+    // a missing table fails at load(), not at the first action
+    val missing = intercept[IllegalArgumentException](
+      spark.read.format("graft").load(freshRoot()))
+    assert(missing.getMessage.contains("no snapshot table"), missing.getMessage)
+  }
+
+  test("format(\"graft\") and USING graft views mask live delete vectors and equality deletes natively") {
+    val t = rangeTable() // ids 1..40 in 4 decade files
+    t.deleteWithVectors(col("id").isin(3L, 13L, 23L)) // delete vectors
+    t.deleteByKeys(Seq(15L, 33L).toDF("id"), Seq("id")) // equality delete
+    val snap = t.currentSnapshot()
+    assert(snap.dvFiles.nonEmpty && snap.deleteFiles.nonEmpty,
+      "both delete kinds must be live (uncompacted)")
+    val live = (1L to 40L).filterNot(Set(3L, 13L, 23L, 15L, 33L))
+    val viaFormat = spark.read.format("graft").load(t.root.toString)
+    assert(viaFormat.select("id").as[Long].collect().sorted.toSeq == live)
+    spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_masked " +
+      s"USING graft OPTIONS (path '${t.root}')")
+    val viaView = spark.sql("SELECT count(*) FROM graft_masked WHERE v > 0")
+    assert(viaView.as[Long].head() == live.count(_ % 10 != 0).toLong)
+    Seq(viaFormat.filter(col("id") > 10L), viaView).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("GraftBatchScan") &&
+        !plan.contains("RowDataSourceScan"), plan)
+    }
   }
 
   test("a blind append racing evolveSpec restages under the new spec and succeeds") {
@@ -1458,7 +1483,9 @@ class SnapshotTableSpec extends AnyFunSuite {
     spark.sql("UPDATE graft_dml SET v = v + 100 WHERE id <= 2")
     assert(t.read().filter(col("id") <= 2).select("v").as[Double]
       .collect().toSet == Set(101.0, 102.0))
-    assert(t.currentSnapshot().operation == "update")
+    // the view plans Spark's native row-level rewrite, as catalog SQL
+    // does: old images masked by a delete vector, new images appended
+    assert(t.currentSnapshot().operation == "update-pos")
     // MERGE: conditional update + delete + insert through spark.sql
     Seq((1L, java.sql.Timestamp.valueOf("2024-06-01 00:00:00"), 1000.0),
         (3L, java.sql.Timestamp.valueOf("2024-06-02 00:00:00"), 3000.0),
@@ -1480,17 +1507,42 @@ class SnapshotTableSpec extends AnyFunSuite {
     val after2 = t.read().filter(col("id").isin(1L, 99L))
       .select("id", "v").as[(Long, Double)].collect().toMap
     assert(after2 == Map(1L -> 2000.0, 99L -> 19800.0), s"got $after2")
-    // unsupported shapes still fail with the limitation, not a v2 error
-    val e2 = intercept[Exception](spark.sql(
+    // a non-equi ON plans natively too: every target id below some
+    // source id (99) is matched and deleted
+    spark.sql(
       """MERGE INTO graft_dml t USING graft_dml_src s ON t.id < s.id
-        |WHEN MATCHED THEN DELETE""".stripMargin))
-    assert(e2.getMessage.contains("conjunction"), e2.getMessage)
+        |WHEN MATCHED THEN DELETE""".stripMargin)
+    assert(t.read().select("id").as[Long].collect().toSeq == Seq(99L))
     // time-travel views refuse DML
     spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_dml_v2 " +
       s"USING graft OPTIONS (path '${t.root}', versionAsOf '2')")
     val e3 = intercept[Exception](
       spark.sql("DELETE FROM graft_dml_v2 WHERE id = 1"))
     assert(e3.getMessage.contains("time-travel"), e3.getMessage)
+  }
+
+  test("SQL DML on temp views over month, bucket and identity partitioned tables") {
+    Seq(PartitionSpec("ts", "month"), PartitionSpec("id", "bucket[4]"),
+        PartitionSpec("id", "identity")).foreach { spec =>
+      val t = SnapshotTable.create(spark, freshRoot(), eventsSchema, Some(spec))
+      t.append(rows((1, "2024-01-05", 1.0), (2, "2024-02-06", 2.0),
+        (3, "2024-03-07", 3.0)))
+      spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_part_dml " +
+        s"USING graft OPTIONS (path '${t.root}')")
+      spark.sql("UPDATE graft_part_dml SET v = v * 10 WHERE id = 2")
+      Seq((3L, java.sql.Timestamp.valueOf("2024-03-09 00:00:00"), 30.0),
+          (4L, java.sql.Timestamp.valueOf("2024-04-01 00:00:00"), 4.0))
+        .toDF("id", "ts", "v").createOrReplaceTempView("graft_part_src")
+      spark.sql("""MERGE INTO graft_part_dml t USING graft_part_src s
+                  |ON t.id = s.id
+                  |WHEN MATCHED THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      spark.sql("DELETE FROM graft_part_dml WHERE id % 2 = 1 AND id < 2")
+      val got = t.read().select("id", "v").as[(Long, Double)].collect().toMap
+      assert(got == Map(2L -> 20.0, 3L -> 30.0, 4L -> 4.0), s"$spec: $got")
+      // the images landed under the table's own spec
+      assert(t.currentSnapshot().files.forall(_.partition.nonEmpty), spec)
+    }
   }
 
   test("SQL MERGE from a staging QUERY source, with mismatched column order") {
@@ -1830,12 +1882,12 @@ class SnapshotTableSpec extends AnyFunSuite {
       .filter(col("id") === 17L).select("id", "v")
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(17L))
     val plan = df.queryExecution.executedPlan.toString
-    // the DSv1 bridge rendered as RowDataSourceScan / Scan ExistingRDD;
-    // the strategy plans the pruned read as a native parquet scan
+    // the RDD bridge renders as RowDataSourceScan / Scan ExistingRDD;
+    // the read plans as the native batch scan, as catalog reads do
     assert(!plan.contains("RowDataSourceScan") && !plan.contains("ExistingRDD"),
       s"RDD bridge still in plan:\n$plan")
-    assert(plan.contains("FileScan parquet") || plan.contains("Scan parquet"),
-      s"expected a native parquet scan:\n$plan")
+    assert(plan.contains("GraftBatchScan"),
+      s"expected the native batch scan:\n$plan")
     // manifest pruning runs at PLANNING: a predicate outside every
     // file's bounds leaves no parquet scan at all (pure metadata skip —
     // through SQL, not just the Scala readWhere path)
@@ -2980,7 +3032,7 @@ class SnapshotTableSpec extends AnyFunSuite {
     t.setProperties(Map("k" -> "v"))
     assert(t.changesRoute(t.currentVersion() - 1, t.currentVersion())
       == "netzero")
-    // DSv1 OPTIONS parity for the labeled feed: a copy-on-write update
+    // OPTIONS parity for the labeled feed: a copy-on-write update
     // window read with updateImages 'true' serves CDF labels (the
     // relabeled netted diff — everything in an `update` commit IS an
     // update image) to a SQL-only consumer
@@ -2994,6 +3046,6 @@ class SnapshotTableSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(lbl.sorted.toSeq == Seq(
       ("update_postimage", 2L, 3.0), ("update_preimage", 2L, 2.0)),
-      s"DSv1 updateImages labels: ${lbl.mkString("; ")}")
+      s"USING graft updateImages labels: ${lbl.mkString("; ")}")
   }
 }

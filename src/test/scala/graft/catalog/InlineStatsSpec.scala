@@ -171,9 +171,35 @@ class InlineStatsSpec extends AnyFunSuite {
     // UPDATE routes through the native delta write (GraftDeltaWriter):
     // update images are freshly staged files with inline stats
     spark.sql("UPDATE graft.ist.u SET v = v * 2 WHERE id % 10 = 3")
+    assertDeltaParity(t, before)
+  }
+
+  test("native delta into a literal __HIVE_DEFAULT_PARTITION__ value: entries match the read-back") {
+    val wh = spark.conf.get("spark.sql.catalog.graft.warehouse")
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ist")
+    spark.sql("DROP TABLE IF EXISTS graft.ist.hd")
+    spark.sql("CREATE TABLE graft.ist.hd (id BIGINT, kind STRING, v DOUBLE) " +
+      "PARTITIONED BY (kind)")
+    spark.sql("INSERT INTO graft.ist.hd SELECT id, " +
+      "CASE WHEN id % 2 = 0 THEN '__HIVE_DEFAULT_PARTITION__' ELSE 'b' END, " +
+      "cast(id as double) FROM range(0, 100)")
+    val t = SnapshotTable.load(spark, s"$wh/ist/hd")
+    val before = t.currentSnapshot().files.map(_.path).toSet
+    // the segment decodes to the default (None) partition: the staged
+    // append and the delta writer must both record it that way
+    spark.sql("UPDATE graft.ist.hd SET v = v + 1 WHERE id % 10 = 2")
+    assertDeltaParity(t, before)
+    assert(t.currentSnapshot().files.forall(
+      !_.partition.contains("__HIVE_DEFAULT_PARTITION__")))
+  }
+
+  /** Entries a native delta statement committed since `before` against
+    * a fresh statsForStaged read-back of the same files.
+    */
+  private def assertDeltaParity(t: SnapshotTable, before: Set[String]): Unit = {
     val snap = t.currentSnapshot()
     val fresh = snap.files.filterNot(f => before.contains(f.path))
-    assert(fresh.nonEmpty, "UPDATE staged no new files")
+    assert(fresh.nonEmpty, "the statement staged no new files")
     val rel = fresh.head.path.split('/').init
       .takeWhile(!_.contains("=")).mkString("/")
     val readBack = t.statsForStaged(rel, snap.schema, snap.spec,
@@ -182,7 +208,9 @@ class InlineStatsSpec extends AnyFunSuite {
     fresh.foreach { e =>
       val r = readBack(e.path)
       assert(e.partition == r.partition && e.rows == r.rows &&
-        e.bytes == r.bytes, s"entry mismatch for ${e.path}")
+        e.bytes == r.bytes, s"entry mismatch for ${e.path}: " +
+          s"${e.partition}/${e.rows}/${e.bytes} vs " +
+          s"${r.partition}/${r.rows}/${r.bytes}")
       // the committed manifest may have offloaded big inline blooms to
       // ref: sidecars (a SnapshotLog post-commit transform) — resolve
       // tokens back to payloads before comparing
